@@ -60,10 +60,11 @@ def _wait_for_quiet(max_wait_s: float = 420.0, threshold: float = 2.0) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from vectordb_migrator_spark.session import default_cpus, get_spark
+
+    cpus = default_cpus()
     load_at_start = _wait_for_quiet()
 
-    from vectordb_migrator_spark.session import get_spark
     from vectordb_migrator_spark.suite import QUERIES
 
     spark = get_spark("bench", cpus=cpus, shuffle_partitions=cpus)

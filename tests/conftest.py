@@ -25,7 +25,6 @@ def spark():
 
     s = get_spark(
         "tests",
-        cpus=8,
         shuffle_partitions=8,
         extra_conf={
             # bucketed-table tests saveAsTable into a throwaway warehouse

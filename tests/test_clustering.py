@@ -124,6 +124,9 @@ def test_kmeans_fit_loop_reads_persisted_projection(spark, monkeypatch):
 
     monkeypatch.setattr(clustering, "_lloyd_partials_kernel", spy_loop)
     monkeypatch.setattr(clustering, "assign_clusters", spy_final)
+    # the distributed loop is the one under test: a size bound of 0
+    # keeps this small corpus out of the single-task loop
+    monkeypatch.setattr(clustering, "LLOYD_KERNEL_MAX_VALUES", 0)
     pts = [(i, [float(i % 7), float(i % 3)]) for i in range(60)]
     df = spark.createDataFrame(pts, "vec_id long, embedding array<float>")
     assigned, _, n_iters = kmeans_fit_ref()(df, k=3, max_iter=5)
@@ -484,3 +487,101 @@ def test_kmeans_fit_empty_cluster_keeps_previous_centroid(spark):
     assert rows_new == rows_old
     # the emptied cluster's centroid must be a real (finite) vector
     assert all(x == x and abs(x) < 1e9 for c in c_new for x in c)
+
+
+def _separated_points(spark, n, dim, k, seed):
+    """``n`` points around ``k`` far-apart centres (row i belongs to
+    centre i % k, so the k smallest ids seed one centroid per centre),
+    spread over 4 partitions."""
+    rng = np.random.default_rng(seed)
+    centres = rng.normal(size=(k, dim)) * 50.0
+    pts = [(i, (centres[i % k] + rng.normal(size=dim)).tolist()) for i in range(n)]
+    df = spark.createDataFrame(pts, "vec_id long, embedding array<double>")
+    return df.repartition(4).localCheckpoint()
+
+
+def _lloyd_partition_order(parts, centroids, n_iter):
+    """NumPy replica of the dataflow Lloyd arithmetic: a per-dimension
+    distance fold, first-index argmin, one row-order partial sum per
+    partition, the partials added in partition order, then sum/count
+    (an empty cluster keeps its centroid)."""
+    c = centroids.astype(np.float64)
+    for _ in range(n_iter):
+        acc = np.zeros_like(c)
+        cnt = np.zeros(len(c), dtype=np.int64)
+        for x in parts:
+            d = np.zeros((len(x), len(c)))
+            for t in range(x.shape[1]):
+                diff = x[:, t, None] - c[None, :, t]
+                d += diff * diff
+            j = d.argmin(axis=1)
+            part = np.zeros_like(c)
+            np.add.at(part, j, x)
+            acc += part
+            cnt += np.bincount(j, minlength=len(c))
+        c = np.where(cnt[:, None] > 0, acc / np.maximum(cnt, 1)[:, None], c)
+    return c.tolist()
+
+
+def test_kmeans_fit_multi_partition_single_task_matches_dataflow(spark, monkeypatch):
+    """The size rule runs a small MULTI-partition fit corpus through the
+    single-task Lloyd loop. Its centroids must be exactly the dataflow
+    arithmetic with per-partition partials merged in partition order
+    (a NumPy replica), and agree with the distributed per-iteration
+    loop (bound forced to 0) and with the Catalyst path: same iteration
+    count and assignments, centroids within 1e-12 (the dataflow merges
+    the partials in an unpinned order)."""
+    import vectordb_migrator_spark.operators.clustering as clustering
+    from spark_status import count_jobs
+
+    df = _separated_points(spark, 400, 8, 4, seed=5)
+    assert df.rdd.getNumPartitions() == 4
+
+    def fit(**kw):
+        a, c, n = clustering.kmeans_fit(df, k=4, max_iter=6, tol=0.0, **kw)
+        return sorted(map(tuple, a.select("vec_id", "cluster").collect())), c, n
+
+    (a_one, c_one, n_one), jobs_one = count_jobs(spark, fit)
+    # exactly the dataflow arithmetic with the partials merged in
+    # partition order
+    glom = [rows for rows in df.rdd.glom().collect() if rows]
+    seeds = sorted((r["vec_id"], r["embedding"]) for p in glom for r in p)[:4]
+    assert c_one == _lloyd_partition_order(
+        [np.array([r["embedding"] for r in p]) for p in glom],
+        np.array([v for _, v in seeds]),
+        n_iter=6,
+    )
+    monkeypatch.setattr(clustering, "LLOYD_KERNEL_MAX_VALUES", 0)
+    (a_flow, c_flow, n_flow), jobs_flow = count_jobs(spark, fit)
+    a_cat, c_cat, n_cat = fit(use_kernel=False)
+    assert n_one == n_flow == n_cat == 6
+    assert a_one == a_flow == a_cat
+    for other in (c_flow, c_cat):
+        assert max(
+            abs(x - y) for c1, c2 in zip(c_one, other) for x, y in zip(c1, c2)
+        ) <= 1e-12
+    assert jobs_one < jobs_flow  # the single-task loop really ran
+
+
+def test_kmeans_fit_over_the_size_bound_takes_the_dataflow_loop(spark, monkeypatch):
+    """The size rule decides from the row count, not the partition
+    count: with the bound at the corpus size the whole fit is one task;
+    one row short of it, every Lloyd iteration is its own distributed
+    job round. Asserted from the job group's job count, not timing."""
+    import vectordb_migrator_spark.operators.clustering as clustering
+    from spark_status import count_jobs
+
+    df = _separated_points(spark, 60, 2, 3, seed=7)
+
+    def fit():
+        return clustering.kmeans_fit(df, k=3, max_iter=5, tol=0.0)
+
+    monkeypatch.setattr(clustering, "LLOYD_KERNEL_MAX_VALUES", 60 * 2)
+    (_, c_in, n_in), jobs_in = count_jobs(spark, fit)
+    monkeypatch.setattr(clustering, "LLOYD_KERNEL_MAX_VALUES", 59 * 2)
+    (_, c_over, n_over), jobs_over = count_jobs(spark, fit)
+    assert n_in == n_over == 5
+    assert jobs_over >= jobs_in + n_over  # at least one job per iteration
+    assert max(
+        abs(x - y) for c1, c2 in zip(c_in, c_over) for x, y in zip(c1, c2)
+    ) <= 1e-12

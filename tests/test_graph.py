@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from vectordb_migrator_spark.operators.graph import (
@@ -29,6 +30,43 @@ def _uf_components(edges):
         union(a, b)
     # min id per component
     return {v: find(v) for v in list(parent)}
+
+
+@pytest.fixture
+def wide_shuffles(spark):
+    """Keep every exchange at the session's shuffle width. The kernel
+    A/B tests feed 4-partition edge frames, and AQE would otherwise
+    coalesce a small graph's edge frame back to one partition before
+    the size rule takes it into one task."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _kernel_vs_dataflow(monkeypatch, kernel, run):
+    """``run(**kw)`` -> DataFrame, once with the default size bound and
+    once with ``kernel_max_edges=0``; returns both row sets after
+    checking that only the first called ``graph.<kernel>``, over a
+    one-partition input."""
+    import vectordb_migrator_spark.operators.graph as graph
+
+    seen = []
+    real = getattr(graph, kernel)
+
+    def spy(df, **kw):
+        seen.append(df.rdd.getNumPartitions())
+        return real(df, **kw)
+
+    monkeypatch.setattr(graph, kernel, spy)
+    kern = set(map(tuple, run().collect()))
+    assert seen == [1]
+    flow = set(map(tuple, run(kernel_max_edges=0).collect()))
+    assert seen == [1]
+    return kern, flow
 
 
 def test_cc_basic_chain_and_islands(spark):
@@ -66,11 +104,11 @@ def test_cc_matches_union_find(spark, edges):
     assert got == expect
 
 
-def test_cc_kernel_matches_iterative(spark):
-    # r13: small graphs take the single-task numpy kernel; force the
-    # iterative dataflow with kernel_max_edges=0 and assert identical
-    # (id, comp) sets on a messy graph (dense cluster + chain + self
-    # loop + isolated pair).
+def test_cc_kernel_matches_iterative(spark, wide_shuffles, monkeypatch):
+    # small graphs take the single-task numpy kernel (size rule, on a
+    # multi-partition input); force the iterative dataflow with
+    # kernel_max_edges=0 and assert identical (id, comp) sets on a
+    # messy graph (dense cluster + chain + self loop + isolated pair).
     import random
 
     rng = random.Random(13)
@@ -79,12 +117,10 @@ def test_cc_kernel_matches_iterative(spark):
         + [(i, i + 1) for i in range(300, 340)]
         + [(500, 500), (1000, 999)]
     )
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    kern = {(r["id"], r["comp"]) for r in connected_components(df).collect()}
-    iterative = {
-        (r["id"], r["comp"])
-        for r in connected_components(df, kernel_max_edges=0).collect()
-    }
+    df = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(4)
+    kern, iterative = _kernel_vs_dataflow(
+        monkeypatch, "_cc_kernel", lambda **kw: connected_components(df, **kw)
+    )
     assert kern == iterative
     assert len(kern) == len({i for e in edges for i in e})
 
@@ -215,31 +251,29 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-6
 
 
-def test_pagerank_kernel_matches_dataflow(spark):
-    # r13: small graphs take the single-task decimal-replay kernel;
-    # kernel_max_edges=0 forces the dataflow loop. The DECIMAL(28,18)
-    # + round-12 trajectory is order- and engine-independent, so the
-    # two paths must agree BIT FOR BIT in all three modes.
+def test_pagerank_kernel_matches_dataflow(spark, wide_shuffles, monkeypatch):
+    # small graphs take the single-task decimal-replay kernel (size
+    # rule, on a multi-partition input); kernel_max_edges=0 forces the
+    # dataflow loop. The DECIMAL(28,18) + round-12 trajectory is order-
+    # and engine-independent, so the two paths must agree BIT FOR BIT
+    # in all three modes.
     import random
 
     from vectordb_migrator_spark.operators.graph import pagerank
 
     rng = random.Random(7)
     edges = [(rng.randrange(40), rng.randrange(40)) for _ in range(120)]
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
+    df = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(4)
     for kw in (
         {},
         {"undirected": False},
         {"undirected": False, "seeds": [1, 3, 5]},
         {"seeds": [0, 2]},
     ):
-        kern = {
-            r["id"]: r["rank"] for r in pagerank(df, **kw).collect()
-        }
-        flow = {
-            r["id"]: r["rank"]
-            for r in pagerank(df, kernel_max_edges=0, **kw).collect()
-        }
+        with monkeypatch.context() as mp:
+            kern, flow = _kernel_vs_dataflow(
+                mp, "_pagerank_kernel", lambda **m: pagerank(df, **kw, **m)
+            )
         assert kern == flow, kw
 
 
@@ -652,10 +686,11 @@ def test_adamic_adar_self_loop_does_not_abort(spark):
     assert (2, 3) in got  # the real wedge through 1 still scores
 
 
-def test_two_phase_kernel_matches_star_rounds(spark):
-    # r13: small graphs take the single-task numpy kernel; force the
-    # alternating-star dataflow with kernel_max_edges=0 and assert
-    # identical (id, comp) sets, self-loop-only vertices included.
+def test_two_phase_kernel_matches_star_rounds(spark, wide_shuffles, monkeypatch):
+    # small graphs take the single-task numpy kernel (size rule, on a
+    # multi-partition input); force the alternating-star dataflow with
+    # kernel_max_edges=0 and assert identical (id, comp) sets,
+    # self-loop-only vertices included.
     import random
 
     from vectordb_migrator_spark.operators.graph import (
@@ -668,25 +703,21 @@ def test_two_phase_kernel_matches_star_rounds(spark):
         + [(i, i + 1) for i in range(300, 360)]
         + [(700, 700), (900, 901)]
     )
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    kern = {
-        (r["id"], r["comp"])
-        for r in connected_components_two_phase(df).collect()
-    }
-    star = {
-        (r["id"], r["comp"])
-        for r in connected_components_two_phase(
-            df, kernel_max_edges=0
-        ).collect()
-    }
+    df = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(4)
+    kern, star = _kernel_vs_dataflow(
+        monkeypatch,
+        "_cc_kernel",
+        lambda **kw: connected_components_two_phase(df, **kw),
+    )
     assert kern == star
     assert len(kern) == len({i for e in edges for i in e})
 
 
-def test_lpa_kernel_matches_dataflow_rounds(spark):
-    # r13: the single-task LPA kernel must reproduce the synchronous
-    # dataflow rounds label-for-label (deterministic integer tie rule)
-    # for several round counts on a messy graph.
+def test_lpa_kernel_matches_dataflow_rounds(spark, wide_shuffles, monkeypatch):
+    # the single-task LPA kernel (size rule, on a multi-partition
+    # input) must reproduce the synchronous dataflow rounds
+    # label-for-label (deterministic integer tie rule) for several
+    # round counts on a messy graph.
     import random
 
     from vectordb_migrator_spark.operators.graph import label_propagation
@@ -697,16 +728,13 @@ def test_lpa_kernel_matches_dataflow_rounds(spark):
         + [(i, i + 1) for i in range(200, 240)]
         + [(400, 401), (500, 500)]
     )
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
+    df = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(4)
     for n_iter in (1, 2, 3, 5):
-        kern = {
-            (r["id"], r["label"])
-            for r in label_propagation(df, n_iter=n_iter).collect()
-        }
-        flow = {
-            (r["id"], r["label"])
-            for r in label_propagation(
-                df, n_iter=n_iter, kernel_max_edges=0
-            ).collect()
-        }
+        with monkeypatch.context() as mp:
+            kern, flow = _kernel_vs_dataflow(
+                mp,
+                "_lpa_kernel",
+                lambda **kw: label_propagation(df, n_iter=n_iter, **kw),
+            )
         assert kern == flow, f"n_iter={n_iter}"
+

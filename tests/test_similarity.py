@@ -1789,3 +1789,29 @@ def test_graph_certificates_kernel_matches_declarative(spark):
         old = [tuple(r) for r in fn(df, probe, use_kernel=False, **kw).collect()]
         assert new == old, fn.__name__
         assert new, fn.__name__
+
+
+def test_pq_fp_multi_partition_single_task_matches_dataflow(
+    spark, embeddings, monkeypatch
+):
+    """The size rule runs a small MULTI-partition PQ refinement in one
+    task; every quantity is an exact integer, so it must equal the
+    distributed per-iteration loop (bound forced to 0) exactly, in
+    fewer Spark jobs."""
+    import vectordb_migrator_spark.operators.similarity as sim
+    from spark_status import count_jobs
+
+    e = embeddings.limit(300).repartition(4).localCheckpoint()
+    assert e.rdd.getNumPartitions() == 4
+    init = sim.pq_sampled_codebooks(e, m=4, k=8)
+
+    def fit():
+        return sim.pq_learned_codebooks_fp(
+            e, m=4, k=8, n_iter=3, init_codebooks=init
+        )
+
+    one, jobs_one = count_jobs(spark, fit)
+    monkeypatch.setattr(sim, "LLOYD_KERNEL_MAX_VALUES", 0)
+    flow, jobs_flow = count_jobs(spark, fit)
+    assert one == flow
+    assert jobs_one < jobs_flow

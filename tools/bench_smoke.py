@@ -33,7 +33,7 @@ def run(names, sf_dir: str, *, spark=None, queries=None) -> list[str]:
     if spark is None:
         from vectordb_migrator_spark.session import get_spark
 
-        spark = get_spark("bench_smoke", cpus=16)
+        spark = get_spark("bench_smoke")
     failures = []
     for name in names:
         t0 = time.time()

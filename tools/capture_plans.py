@@ -32,7 +32,11 @@ def main() -> None:
     from vectordb_migrator_spark.session import get_spark
     from vectordb_migrator_spark.suite import QUERIES
 
-    spark = get_spark("capture_plans", cpus=32, shuffle_partitions=32)
+    spark = get_spark(
+        # shuffle width pinned so captured plan text does not depend on
+        # the capturing box
+        "capture_plans", shuffle_partitions=32
+    )
     out.mkdir(parents=True, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, sf_dir)

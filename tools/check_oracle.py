@@ -148,7 +148,7 @@ def main() -> int:
     import __spark_entry__ as e
     from vectordb_migrator_spark.session import get_spark
 
-    spark = get_spark("check_oracle", cpus=16)
+    spark = get_spark("check_oracle")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -65,7 +65,7 @@ def main() -> int:
         print("PLAIN-SESSION PARITY GATE FAILED")
         return 1
 
-    spark = get_spark("gate", cpus=16)
+    spark = get_spark("gate")
 
     import plan_audit
 

@@ -36,7 +36,7 @@ def audit(names, sf_dir: str, *, spark=None, queries=None) -> dict:
     if spark is None:
         from vectordb_migrator_spark.session import get_spark
 
-        spark = get_spark("plan_audit", cpus=8)
+        spark = get_spark("plan_audit")
     flagged: dict[str, list[str]] = {}
     errors: dict[str, str] = {}
     for name in names:

@@ -32,10 +32,10 @@ def main() -> None:
         else:
             names.append(a)
 
-    from vectordb_migrator_spark.session import get_spark
+    from vectordb_migrator_spark.session import default_cpus, get_spark
     from vectordb_migrator_spark.suite import QUERIES
 
-    spark = get_spark("profile", cpus=32, shuffle_partitions=32)
+    spark = get_spark("profile", shuffle_partitions=default_cpus())
     spark.range(1000).count()
     spark.range(1000).mapInPandas(lambda it: it, schema="id long").write.format(
         "noop"

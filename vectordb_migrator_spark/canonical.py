@@ -134,16 +134,6 @@ def to_canonical_columns(
     return df.select(*cols)
 
 
-def from_canonical_columns(df: DataFrame, metadata_keys: Sequence[str]) -> DataFrame:
-    """Inverse of :func:`to_canonical_columns` — explode metadata back to
-    typed columns for per-column sinks (pgvector's one-column-per-key
-    layout, ``adapters/pgvector.py:170-182``)."""
-    cols: list[Column] = [F.col("id"), F.col("vector")]
-    for k in metadata_keys:
-        cols.append(F.col("metadata").getItem(k).alias(k))
-    return df.select(*cols)
-
-
 def drop_missing_ids(df: DataFrame, id_column: str = "id") -> DataFrame:
     """C4 — skip records without an id, as the Milvus sink does
     (``adapters/milvus.py:188-192``). Count the drops with

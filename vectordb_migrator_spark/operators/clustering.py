@@ -14,8 +14,9 @@ Scale design per iteration:
 
 Determinism: seeds are the vectors of the k smallest ids, ties in the
 assignment argmin break toward the lower cluster id, and iteration
-stops on centroid shift < tol or max_iter. Same data → same clusters,
-every run, every partitioning.
+stops on centroid shift < tol or max_iter. Same data → same clusters;
+centroid sums merge per-partition partials, so a different
+partitioning can move centroids in the last ulps (see kmeans_fit).
 """
 
 from __future__ import annotations
@@ -23,22 +24,14 @@ from __future__ import annotations
 import math
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from vectordb_migrator_spark.operators.similarity import ivf_build_centroids
-
-
-def _sq_dist(vec: Column, center: list[float]) -> Column:
-    """Squared L2 distance to a plan-time constant center — one
-    zip_with + sum fold in codegen."""
-    from vectordb_migrator_spark.operators.similarity import probe_literal
-
-    return F.aggregate(
-        F.zip_with(vec, probe_literal(center), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
+from vectordb_migrator_spark.operators.similarity import (
+    LLOYD_KERNEL_MAX_VALUES,
+    ivf_build_centroids,
+)
+from vectordb_migrator_spark.operators.util import single_task_input
 
 
 def assign_clusters(
@@ -177,7 +170,7 @@ def _lloyd_partials_kernel(
 
 
 def _lloyd_all_iters_kernel(
-    fit_df: DataFrame,
+    one_task: DataFrame,
     centroids: list[list[float]],
     *,
     vec_col: str,
@@ -185,20 +178,26 @@ def _lloyd_all_iters_kernel(
     tol: float,
 ) -> tuple[list[list[float]], int]:
     """Run the ENTIRE Lloyd loop inside one mapInPandas task and
-    return ``(centroids, n_iters)`` — the r13 coordination-diet twin
-    of :func:`_lloyd_partials_kernel`, applicable ONLY when the
-    persisted fit frame is a single partition (the caller guards).
+    return ``(centroids, n_iters)`` — the single-task twin of
+    :func:`_lloyd_partials_kernel`. ``one_task`` is the persisted fit
+    frame tagged with each row's source partition (``__pid``) and
+    coalesced to one partition (:func:`~.util.single_task_input`).
 
-    Bit-identical to the per-iteration path by construction: with one
-    input partition the distributed iteration's ``sum(psum)/sum(cnt)``
-    merges exactly one partial, so every float the per-iteration path
-    produces is the single task's own ``np.add.at`` accumulation — the
-    in-task loop below runs the SAME batch-order accumulation, the
-    same ``s/cnt`` IEEE division, the same previous-centroid fallback,
-    and the same Python-float shift/tol trajectory as the driver loop.
-    What changes is coordination: one scheduled job instead of
-    ``n_iters`` job+collect round trips (measured ~0.25 s of pure
-    scheduling per iteration at sf0.1)."""
+    The arithmetic is the per-iteration path's: assignment is
+    row-local, so it runs over all rows at once; the sums are kept as
+    ONE partial per source partition (row-order ``np.add.at`` from
+    zero, exactly what :func:`_lloyd_partials_kernel` emits for that
+    partition), and the partials merge by sequential addition in
+    partition order — the left fold the dataflow ``sum`` builds, in
+    one of the orders its shuffle fetch can deliver. Then the same
+    ``s/cnt`` IEEE division, the same previous-centroid fallback for
+    an empty cluster and the same Python-float shift/tol trajectory
+    as the per-iteration loop. A one-partition input is therefore
+    bit-identical to the dataflow loop; with several partitions the
+    dataflow's merge order is not pinned, so the two agree to the
+    last ulps of that merge (same assignments on well-separated
+    data). What changes is coordination: one scheduled job instead of
+    ``n_iters`` job+collect round trips."""
     cents0 = [[float(x) for x in c] for c in centroids]
     k = len(cents0)
     mi, tl = int(max_iter), float(tol)
@@ -207,44 +206,47 @@ def _lloyd_all_iters_kernel(
         import numpy as np
         import pandas as pd
 
-        # materialize the (single) partition's batches once; the
-        # caller guards that this is one comfortably-task-sized
-        # partition. Keeping the batch granularity preserves the
-        # per-batch np.add.at accumulation order of the per-iteration
-        # kernel exactly.
-        mats = [
-            np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            for pdf in it
-            if len(pdf)
-        ]
+        pid_parts, x_parts = [], []
+        for pdf in it:
+            if len(pdf):
+                pid_parts.append(pdf["__pid"].to_numpy(dtype=np.int64))
+                x_parts.append(
+                    np.stack(
+                        [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                    )
+                )
+        # stable sort: each source partition becomes one contiguous
+        # slice, its rows still in arrival (= partition row) order
+        pid = np.concatenate(pid_parts)
+        order = np.argsort(pid, kind="stable")
+        x = np.concatenate(x_parts)[order]
+        cuts = np.flatnonzero(np.diff(pid[order])) + 1
+        parts = list(zip([0, *cuts], [*cuts, len(x)]))
         cents = [list(c) for c in cents0]
         n_iters = 0
         for _ in range(mi):
             n_iters += 1
             c = [np.asarray(cw, dtype=np.float64) for cw in cents]
-            acc = None
+            dmat = np.empty((len(x), k), dtype=np.float64)
+            for j in range(k):
+                dj = np.zeros(len(x), dtype=np.float64)
+                for t in range(x.shape[1]):
+                    diff = x[:, t] - c[j][t]
+                    dj += diff * diff
+                dmat[:, j] = dj
+            jj = dmat.argmin(axis=1)
+            acc = np.zeros((k, x.shape[1]), dtype=np.float64)
             cnt = np.zeros(k, dtype=np.int64)
-            for x in mats:
-                if acc is None:
-                    acc = np.zeros((k, x.shape[1]), dtype=np.float64)
-                dmat = np.empty((len(x), k), dtype=np.float64)
-                for j in range(k):
-                    dj = np.zeros(len(x), dtype=np.float64)
-                    for t in range(x.shape[1]):
-                        diff = x[:, t] - c[j][t]
-                        dj += diff * diff
-                    dmat[:, j] = dj
-                jj = dmat.argmin(axis=1)
-                np.add.at(acc, jj, x)
-                np.add.at(cnt, jj, 1)
-            by_cid: dict[int, list[float]] = {}
-            if acc is not None:
-                for ci in range(k):
-                    if cnt[ci] > 0:
-                        by_cid[ci] = [
-                            float(acc[ci, d] / float(cnt[ci]))
-                            for d in range(acc.shape[1])
-                        ]
+            for lo, hi in parts:
+                part = np.zeros_like(acc)
+                np.add.at(part, jj[lo:hi], x[lo:hi])
+                acc += part
+                cnt += np.bincount(jj[lo:hi], minlength=k)
+            by_cid = {
+                ci: [float(acc[ci, d] / float(cnt[ci])) for d in range(acc.shape[1])]
+                for ci in range(k)
+                if cnt[ci] > 0
+            }
             new_cents = [by_cid.get(i, cents[i]) for i in range(k)]
             shift = max(
                 sum((a - b) * (a - b) for a, b in zip(old, new))
@@ -262,7 +264,7 @@ def _lloyd_all_iters_kernel(
         )
 
     rows = (
-        fit_df.select(vec_col)
+        one_task.select("__pid", vec_col)
         .mapInPandas(
             gen, schema="cluster int, centroid array<double>, n_iters int"
         )
@@ -298,13 +300,22 @@ def kmeans_fit(
     input frame is never cached; only the final assignment touches it,
     exactly once.
 
-    Each iteration defaults to ONE Arrow-kernel pass
+    Size rule (:func:`~.util.single_task_input`): a fit corpus of at
+    most ``LLOYD_KERNEL_MAX_VALUES // dim`` rows runs the whole loop
+    in one task (:func:`_lloyd_all_iters_kernel`), whatever its
+    partition count; the row count comes from the seed scan. A larger
+    corpus runs one distributed Arrow-kernel pass per iteration
     (:func:`_lloyd_partials_kernel` — assignment + per-(cluster, pos)
     partial sums fused, k×dim rows per task) instead of an
     interpreted-HOF assignment feeding a posexplode of N×dim value
-    rows; the kernel's float trajectory is bit-identical by
-    construction (per-dimension/row-order sequential accumulation,
-    first-index argmin — A/B-asserted in tests). ``use_kernel=False``
+    rows. What holds between the paths: every path assigns with the
+    same per-dimension distance fold and first-index argmin and sums
+    each partition's rows in row order; on a one-partition input all
+    three are bit-identical. Across partitions the distributed merge
+    order of the per-partition partials is not pinned, so centroids
+    can differ in the last ulps between runs and paths (the
+    single-task loop merges in partition order, one of the orders the
+    dataflow can take). A/B-asserted in tests. ``use_kernel=False``
     keeps the pure-Catalyst path.
 
     ``sample_fraction`` fits the centroids on a deterministic hash
@@ -328,8 +339,12 @@ def kmeans_fit(
         )
     fit_df = fit_df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
+        # the seed scan reads every cached row anyway, so it also
+        # counts them (an observation: no extra job) for the size rule
+        n_fit = Observation()
         seeds = (
-            fit_df.orderBy(id_col)
+            fit_df.observe(n_fit, F.count(F.lit(1)).alias("n"))
+            .orderBy(id_col)
             .limit(k)
             .select(F.col(vec_col).alias("v"))
             .collect()
@@ -338,16 +353,19 @@ def kmeans_fit(
             raise ValueError(f"fit corpus has fewer than k={k} rows")
         centroids = [[float(x) for x in r["v"]] for r in seeds]
 
-        # Single-partition fit corpora (the local-mode/sampled shape;
-        # a real multi-partition corpus keeps the distributed loop) run
-        # every Lloyd iteration inside ONE task: with one partition the
-        # distributed merge is a no-op, so the in-task loop is
-        # bit-identical while costing one job instead of n_iters
-        # job+collect round trips (r13; same size-guarded-kernel
-        # pattern as connected_components/pagerank).
-        if use_kernel and fit_df.rdd.getNumPartitions() == 1:
+        # the size rule: one job instead of n_iters job+collect round
+        # trips, however many partitions the corpus arrived in; the
+        # partition tag keeps the dataflow's per-partition partials
+        one_task = single_task_input(
+            fit_df.withColumn("__pid", F.spark_partition_id()),
+            count=lambda: n_fit.get["n"],
+            max_rows=LLOYD_KERNEL_MAX_VALUES // len(centroids[0])
+            if use_kernel
+            else 0,
+        )
+        if one_task is not None:
             centroids, n_iters = _lloyd_all_iters_kernel(
-                fit_df,
+                one_task,
                 centroids,
                 vec_col=vec_col,
                 max_iter=max_iter,

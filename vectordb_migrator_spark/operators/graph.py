@@ -28,16 +28,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_migrator_spark.operators.util import single_task_input
+
+# Size-rule bounds (util.single_task_input) of the single-task kernels,
+# in edges of each loop's materialized edge frame. The connected-
+# components and label-propagation kernels are vectorized numpy: 4M
+# long pairs is ~64 MB, comfortably one task. PageRank's kernel replays
+# DECIMAL arithmetic per element in Python, hence its modest bound.
+NUMPY_KERNEL_MAX_EDGES = 4_000_000
+PAGERANK_KERNEL_MAX_EDGES = 100_000
+
+
+def _long_ids(df: DataFrame) -> bool:
+    """The numpy kernels read ids as int64: only all-bigint edge frames
+    may take the single-task path."""
+    return {f.dataType.simpleString() for f in df.schema.fields} <= {"bigint"}
+
 
 def _cc_kernel(und: DataFrame) -> DataFrame:
     """Single-task connected components over a small symmetrized edge
-    frame: numpy min-label propagation with pointer jumping inside one
-    mapInPandas kernel. Exact — the fixed point of min-over-neighbors
-    labels seeded with sorted-id index IS the minimum reachable id —
-    and O(E·log n) C-speed vector ops, so a few million edges cost
-    milliseconds where each dataflow round costs a scheduled multi-
-    stage job. Guarded by the edge count in :func:`connected_components`;
-    never used for graphs that could not fit one task."""
+    frame already coalesced to one partition: numpy min-label
+    propagation with pointer jumping inside one mapInPandas kernel.
+    Exact — the fixed point of min-over-neighbors labels seeded with
+    sorted-id index IS the minimum reachable id — and O(E·log n)
+    C-speed vector ops, so a few million edges cost milliseconds where
+    each dataflow round costs a scheduled multi-stage job. Reached only
+    through the size rule (``NUMPY_KERNEL_MAX_EDGES``)."""
 
     def k(batches):
         import numpy as np
@@ -69,7 +85,7 @@ def _cc_kernel(und: DataFrame) -> DataFrame:
                 break
         yield pd.DataFrame({"id": ids, "comp": ids[lab]})
 
-    return und.coalesce(1).mapInPandas(k, schema="id long, comp long")
+    return und.mapInPandas(k, schema="id long, comp long")
 
 
 def connected_components(
@@ -78,7 +94,7 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    kernel_max_edges: int = 4_000_000,
+    kernel_max_edges: int = NUMPY_KERNEL_MAX_EDGES,
 ) -> DataFrame:
     """Components of the undirected graph given by ``edges``.
 
@@ -87,15 +103,16 @@ def connected_components(
     converged within ``max_iter`` rounds (defensive — dup clusters
     converge in a handful).
 
-    Backend selection (r13, guide §2/§5): near-dup edge sets are
-    usually FAR smaller than the corpus that produced them, and every
-    dataflow round costs a scheduled shuffle job regardless of size —
-    measured ~1 s/round over a 1k-edge graph, pure coordination. So
-    after the (always-needed) symmetrize+distinct checkpoint, one
-    cheap count on the checkpointed frame picks the backend: at most
-    ``kernel_max_edges`` symmetrized edges (~64 MB of long pairs —
-    comfortably one task) run as a single vectorized numpy kernel via
-    :func:`_cc_kernel`; anything larger keeps the iterative dataflow
+    Backend selection is the size rule
+    (:func:`~.util.single_task_input`): near-dup edge sets are usually
+    FAR smaller than the corpus that produced them, and every dataflow
+    round costs a scheduled shuffle job regardless of size — measured
+    ~1 s/round over a 1k-edge graph, pure coordination. After the
+    (always-needed) symmetrize+distinct checkpoint, one cheap count on
+    the checkpointed frame decides: at most ``kernel_max_edges``
+    (default ``NUMPY_KERNEL_MAX_EDGES``, 4M) symmetrized edges run as a
+    single vectorized numpy kernel via :func:`_cc_kernel`, whatever
+    the partition count; anything larger keeps the iterative dataflow
     below. Both produce the identical (id, min-reachable-id) result.
     ``kernel_max_edges=0`` disables the fast path (used by A/B tests).
     """
@@ -104,16 +121,16 @@ def connected_components(
     ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
     und = und.distinct().localCheckpoint(eager=True)
 
-    if (
-        kernel_max_edges
-        and {f.dataType.simpleString() for f in und.schema.fields}
-        <= {"bigint"}
-        and und.count() <= kernel_max_edges
-    ):
+    one_task = single_task_input(
+        und,
+        count=und.count,
+        max_rows=kernel_max_edges if _long_ids(und) else 0,
+    )
+    if one_task is not None:
         # eager: match the iterative path's contract of returning an
         # already-materialized checkpoint (multi-consumer callers read
         # it without re-running the kernel)
-        return _cc_kernel(und).localCheckpoint(eager=True)
+        return _cc_kernel(one_task).localCheckpoint(eager=True)
 
     labels = (
         und.select(F.col("a").alias("id"))
@@ -188,7 +205,7 @@ def connected_components_two_phase(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 30,
-    kernel_max_edges: int = 4_000_000,
+    kernel_max_edges: int = NUMPY_KERNEL_MAX_EDGES,
 ) -> DataFrame:
     """Alternating large-star/small-star connected components — the
     huge-diameter-safe backend (Kiveris et al., *Connected Components
@@ -218,7 +235,10 @@ def connected_components_two_phase(
     a 64-bit-sum collision, not order, is the only failure mode and is
     astronomically unlikely); raises after ``max_iter`` rounds
     (defensive — the bound is logarithmic, real dup graphs converge in
-    a handful)."""
+    a handful). Size rule (:func:`~.util.single_task_input`): at most
+    ``kernel_max_edges`` (default ``NUMPY_KERNEL_MAX_EDGES``, 4M)
+    deduplicated edges skip the rounds for the single-task numpy
+    kernel, same result; ``kernel_max_edges=0`` disables it."""
     verts = (
         edges.select(F.col(src).alias("id"))
         .union(edges.select(F.col(dst).alias("id")))
@@ -244,23 +264,18 @@ def connected_components_two_phase(
         return (row["n"], row["h"])
 
     prev = _checksum(e)
-    # Size-guarded single-task backend (r13, same pattern as
-    # connected_components): the checksum above already counted the
-    # deduplicated edge set, so the guard costs nothing. Both backends
-    # compute the same pure function of the graph — (id, min reachable
-    # id) — so the numpy kernel's output is value-identical; large
-    # graphs keep the alternating-star dataflow below.
-    # ``kernel_max_edges=0`` disables the fast path (A/B tests).
-    if (
-        kernel_max_edges
-        and prev[0] <= kernel_max_edges
-        and {f.dataType.simpleString() for f in e.schema.fields}
-        <= {"bigint"}
-    ):
-        sym = e.select(
-            F.col("lo").alias("a"), F.col("hi").alias("b")
-        ).union(e.select(F.col("hi").alias("a"), F.col("lo").alias("b")))
-        comp_map = _cc_kernel(sym)
+    # the checksum above already counted the deduplicated edge set, so
+    # the size rule costs no job; the kernel computes the same pure
+    # function of the graph, (id, min reachable id)
+    one_task = single_task_input(
+        e.select(F.col("lo").alias("a"), F.col("hi").alias("b")).union(
+            e.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
+        ),
+        count=lambda: prev[0],
+        max_rows=kernel_max_edges if _long_ids(e) else 0,
+    )
+    if one_task is not None:
+        comp_map = _cc_kernel(one_task)
         return verts.join(comp_map, "id", "left").select(
             "id", F.coalesce("comp", F.col("id")).alias("comp")
         )
@@ -361,7 +376,8 @@ def _pagerank_kernel(
     decimal, then ``round(base + damping·(s + dang), 12)`` HALF_UP per
     vertex — the order-independent trajectory the dataflow loop was
     built around, evaluated without its n_iter scheduled shuffle
-    rounds. Guarded by edge count in :func:`pagerank`."""
+    rounds. ``e_deg`` arrives coalesced to one partition through the
+    size rule (``PAGERANK_KERNEL_MAX_EDGES``) in :func:`pagerank`."""
 
     def k(batches):
         from decimal import ROUND_HALF_UP, Decimal, localcontext
@@ -452,7 +468,7 @@ def _pagerank_kernel(
             {"id": ids, "rank": np.asarray(rank, dtype="float64")}
         )
 
-    return e_deg.select("a", "b", "deg").coalesce(1).mapInPandas(
+    return e_deg.select("a", "b", "deg").mapInPandas(
         k, schema="id long, rank double"
     )
 
@@ -466,7 +482,7 @@ def pagerank(
     n_iter: int = 10,
     undirected: bool = True,
     seeds: list | None = None,
-    kernel_max_edges: int = 100_000,
+    kernel_max_edges: int = PAGERANK_KERNEL_MAX_EDGES,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the edge list — vertex centrality
     for picking the *canonical* member of a dup family (the hub every
@@ -501,7 +517,13 @@ def pagerank(
     seeds: the expansion queue around a known-bad (contaminated,
     spam, leaked) document set. Seeds are a model-sized Python list
     (an ``isin`` literal — never a join); the exactness contract is
-    unchanged, so the unrolled SQL oracle still replays it."""
+    unchanged, so the unrolled SQL oracle still replays it.
+
+    Size rule (:func:`~.util.single_task_input`): a bigint-id graph of
+    at most ``kernel_max_edges`` (default ``PAGERANK_KERNEL_MAX_EDGES``,
+    100k) edges runs all ``n_iter`` rounds in one task
+    (:func:`_pagerank_kernel`), bit-identical; ``kernel_max_edges=0``
+    disables it."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if undirected:
         e = e.union(
@@ -521,29 +543,22 @@ def pagerank(
     ).localCheckpoint(eager=True)
     if seeds is not None and len(seeds) == 0:
         raise ValueError("personalized pagerank needs a non-empty seed set")
-    if (
-        kernel_max_edges
-        and {
-            f.dataType.simpleString()
-            for f in e_deg.select("a", "b").schema.fields
-        }
-        <= {"bigint"}
-        and e_deg.count() <= kernel_max_edges
-    ):
-        # r13 opt (guide §2.4/§5): same small-graph escape as
-        # connected_components — n_iter dataflow rounds over a few
-        # thousand edges are pure job-scheduling cost. The kernel
-        # replays the EXACT trajectory: the DECIMAL(28,18)
-        # contribution sums and per-iteration round-12 that make the
-        # dataflow order-independent also make it engine-independent,
-        # and decimal.Decimal(repr(x)) is the same shortest-roundtrip
-        # double→decimal conversion Spark's Cast performs
-        # (BigDecimal.valueOf ⇒ Double.toString). Bit-equality vs the
-        # dataflow path is asserted per-SF in tests. Decimal math is
-        # per-element Python, hence the deliberately modest default
-        # bound — production-scale graphs keep the dataflow loop.
+    # n_iter dataflow rounds over a few thousand edges are pure
+    # job-scheduling cost. The single-task kernel replays the EXACT
+    # trajectory: the DECIMAL(28,18) contribution sums and
+    # per-iteration round-12 that make the dataflow order-independent
+    # also make it engine-independent, and decimal.Decimal(repr(x)) is
+    # the same shortest-roundtrip double→decimal conversion Spark's
+    # Cast performs (BigDecimal.valueOf ⇒ Double.toString). Decimal
+    # math is per-element Python, hence the modest bound.
+    one_task = single_task_input(
+        e_deg,
+        count=e_deg.count,
+        max_rows=kernel_max_edges if _long_ids(e_deg.select("a", "b")) else 0,
+    )
+    if one_task is not None:
         return _pagerank_kernel(
-            e_deg,
+            one_task,
             damping=damping,
             n_iter=n_iter,
             undirected=undirected,
@@ -853,7 +868,8 @@ def _lpa_kernel(und: DataFrame, *, n_iter: int) -> DataFrame:
     always vertex ids (integers), each round every vertex takes the
     (count DESC, label ASC) top-1 over its neighbors' PREVIOUS-round
     labels, and the numpy lexsort reproduces exactly that tie rule.
-    Guarded by edge count in :func:`label_propagation`."""
+    ``und`` arrives coalesced to one partition through the size rule
+    (``NUMPY_KERNEL_MAX_EDGES``) in :func:`label_propagation`."""
 
     def k(batches):
         import numpy as np
@@ -891,7 +907,7 @@ def _lpa_kernel(und: DataFrame, *, n_iter: int) -> DataFrame:
             lab = new
         yield pd.DataFrame({"id": ids, "label": ids[lab]})
 
-    return und.coalesce(1).mapInPandas(k, schema="id long, label long")
+    return und.mapInPandas(k, schema="id long, label long")
 
 
 def label_propagation(
@@ -900,7 +916,7 @@ def label_propagation(
     src: str = "id_a",
     dst: str = "id_b",
     n_iter: int = 3,
-    kernel_max_edges: int = 4_000_000,
+    kernel_max_edges: int = NUMPY_KERNEL_MAX_EDGES,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over the
     undirected graph — community detection by iterated neighbor-label
@@ -922,6 +938,12 @@ def label_propagation(
     bipartite-ish graphs under synchronous update, so callers treat
     the result at round k as the answer, not a fixpoint claim.
 
+    Size rule (:func:`~.util.single_task_input`): at most
+    ``kernel_max_edges`` (default ``NUMPY_KERNEL_MAX_EDGES``, 4M)
+    symmetrized bigint edges run every round in one task
+    (:func:`_lpa_kernel`), label-identical; ``kernel_max_edges=0``
+    disables it.
+
     Returns (id, label) for every vertex that appears in an edge."""
     from pyspark.sql import Window as W
 
@@ -931,18 +953,16 @@ def label_propagation(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # Size-guarded single-task backend (r13, the CC-kernel pattern):
-    # every quantity in a synchronous LPA round is an integer with a
-    # deterministic tie rule, so the numpy replay is value-identical;
-    # one cheap count on the already-materialized frame picks it.
-    # ``kernel_max_edges=0`` disables the fast path (A/B tests).
-    if (
-        kernel_max_edges
-        and {f.dataType.simpleString() for f in und.schema.fields}
-        <= {"bigint"}
-        and und.count() <= kernel_max_edges
-    ):
-        return _lpa_kernel(und, n_iter=n_iter).localCheckpoint(
+    # one cheap count on the already-materialized frame decides; every
+    # quantity in a synchronous LPA round is an integer with a
+    # deterministic tie rule, so the numpy replay is value-identical
+    one_task = single_task_input(
+        und,
+        count=und.count,
+        max_rows=kernel_max_edges if _long_ids(und) else 0,
+    )
+    if one_task is not None:
+        return _lpa_kernel(one_task, n_iter=n_iter).localCheckpoint(
             eager=True
         )
     labels = (

@@ -18,6 +18,19 @@ from vectordb_migrator_spark.functions.vector import (
     cosine_similarity,
     dot_product,
 )
+from vectordb_migrator_spark.operators.util import single_task_input
+
+# Size-rule bound of the Lloyd loops (kmeans_fit, pq_learned_codebooks_fp;
+# see util.single_task_input), in vector values (rows x row width): both
+# the in-task memory (8 bytes a value, 32 MB here) and the kernel's
+# per-iteration work scale with it. Measured with kmeans_fit, k=10, 8
+# iterations, 64-d rows read from 8 parquet files on local[4] (4-core
+# VM), single task vs distributed loop: 10k rows 1.2 vs 4.1 s, 50k rows
+# 2.7 vs 4.7 s, 100k rows 5.9 vs 6.1 s, 200k rows 12.8 vs 8.1 s. The
+# bound sits below that 4-core crossover (~6.4M values); more cores move
+# the crossover down only as far as the distributed loop's ~0.25 s of
+# scheduling per iteration allows.
+LLOYD_KERNEL_MAX_VALUES = 4_000_000
 
 
 def probe_literal(vec: list[float]):
@@ -1426,7 +1439,10 @@ def pq_learned_codebooks_fp(
     interpreted-HOF fold it replaces (A/B-asserted in tests;
     ``use_kernel=False`` keeps the pure-Catalyst path, and the SQL
     oracle is untouched either way). Cut the fit's wall time ~3× at
-    sf0.1. int64 headroom: |coord| ≤ scale·|x|max, per-pos sums
+    sf0.1. Size rule (:func:`~.util.single_task_input`): at most
+    ``LLOYD_KERNEL_MAX_VALUES // dsub`` subvector rows run all
+    ``n_iter`` rounds in one task instead, bit-identical for the same
+    integer reason. int64 headroom: |coord| ≤ scale·|x|max, per-pos sums
     bounded by rows·scale·|x|max — cast up to DECIMAL in the agg if a
     corpus ever approaches 2⁶³ (guarded below)."""
     from pyspark import StorageLevel
@@ -1476,15 +1492,15 @@ def pq_learned_codebooks_fp(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
-        # Single-partition sub frames (the local-mode shape; a real
-        # corpus keeps the distributed loop) run ALL n_iter refinement
-        # rounds inside one task (r13, same coordination-diet pattern
-        # as kmeans_fit/_lloyd_all_iters_kernel). Every quantity in
-        # the loop is an exact integer, so sums are order-free and the
-        # in-task replay is bit-identical regardless of batch order —
-        # one scheduled job instead of n_iter kernel+collect round
-        # trips.
-        if use_kernel and sub.rdd.getNumPartitions() == 1:
+        # one count over the persisted frame decides; every quantity in
+        # the loop is an exact integer, so the in-task replay is
+        # bit-identical whatever the row order
+        one_task = single_task_input(
+            sub,
+            count=sub.count,
+            max_rows=LLOYD_KERNEL_MAX_VALUES // dsub if use_kernel else 0,
+        )
+        if one_task is not None:
             import pandas as pd  # noqa: F401 — worker-side import below
 
             cbs0 = [[list(cw) for cw in cb] for cb in cbs]
@@ -1558,7 +1574,7 @@ def pq_learned_codebooks_fp(
                     }
                 )
 
-            rows = sub.mapInPandas(
+            rows = one_task.mapInPandas(
                 _all_iters, schema="s int, j int, pos int, val long"
             ).collect()
             out = [[list(cw) for cw in cb] for cb in cbs]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 
 
@@ -48,3 +50,31 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def single_task_input(
+    df: DataFrame, *, count: Callable[[], int], max_rows: int
+) -> DataFrame | None:
+    """The one size rule for the iterative operator loops (k-means,
+    PQ refinement, connected components, PageRank, label
+    propagation): a materialized loop input of at most ``max_rows``
+    rows runs the WHOLE loop inside one task, because every dataflow
+    round costs a scheduled job whatever its size; a larger one keeps
+    the distributed loop, the path that scales.
+
+    - **Count**: ``count()`` returns the row count of ``df``, taken
+      from a job the loop runs anyway (an edge count, a checksum, an
+      observation of the seed scan); it is called only when the rule
+      is live.
+    - **Decide**: ``count() <= max_rows``. ``max_rows`` is the call
+      site's named bound; ``0`` disables the single-task path without
+      counting (the A/B switch of every loop). The partition count
+      never enters the decision: a small corpus read from many part
+      files is still small.
+    - **Run**: returns ``df.coalesce(1)`` — the same rows as one
+      partition, with no shuffle — for the caller's in-task kernel;
+      ``None`` means keep the distributed loop.
+    """
+    if max_rows <= 0 or count() > max_rows:
+        return None
+    return df.coalesce(1)

@@ -15,6 +15,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Cores for a local session: ``SPARK_GRAFT_CPUS`` when set, else
+    the cores this process may run on (``nproc``; all cores where the
+    OS cannot tell)."""
+    if int(os.environ.get("SPARK_GRAFT_CPUS", "0")):
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "vectordb_migrator_spark",
     *,
@@ -27,10 +38,11 @@ def get_spark(
     AQE is enabled so runtime statistics can re-plan joins (broadcast
     conversion, skew-join splitting, partition coalescing) — this is the
     scale story: the same declarative plans survive 100× data growth
-    because the runtime re-sizes them.
+    because the runtime re-sizes them. ``cpus`` defaults to
+    :func:`default_cpus`.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
 

@@ -172,18 +172,31 @@ class DemoQdrantClient:
     ):
         start = int(offset or 0)
         if scroll_filter or shard_key_selector is not None:
-            # materialize-and-slice fallback (small filtered scans)
-            pts = [
-                self._point(json.loads(line), with_payload, with_vectors)
-                for path, _ in self._index(collection_name)
-                for line in open(path)
-                if shard_key_selector is None
-                or json.loads(line).get("shard_key") == shard_key_selector
+            # materialize-and-slice fallback (small filtered scans). The
+            # filter sees the full record and only the page is projected
+            # to the requested fields, as on a live server — an id-only
+            # scroll must still match payload conditions.
+            full = []
+            for path, _ in self._index(collection_name):
+                with open(path) as f:
+                    for line in f:
+                        rec = json.loads(line)
+                        if (
+                            shard_key_selector is None
+                            or rec.get("shard_key") == shard_key_selector
+                        ):
+                            full.append(self._point(rec, True, True))
+            keep = self._filtered(full, scroll_filter)
+            page = [
+                SimpleNamespace(
+                    id=p.id,
+                    vector=p.vector if with_vectors else None,
+                    payload=p.payload if with_payload else {},
+                )
+                for p in keep[start : start + limit]
             ]
-            pts = self._filtered(pts, scroll_filter)
-            page = pts[start : start + limit]
             nxt = start + len(page)
-            return page, (nxt if nxt < len(pts) else None)
+            return page, (nxt if nxt < len(keep) else None)
         # indexed path: seek via sidecar counts, touching only the
         # segment files this page overlaps. An id-only scroll (the
         # driver's segmentation pre-pass sends with_payload=False,
